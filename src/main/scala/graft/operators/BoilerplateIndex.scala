@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   * corpus distinct-doc counts exactly.
   *
   * Layout: `dir/counts/b=K/` parquet (piece, df) per committed batch,
-  * one meta JSON committed via the shared tmp+rename swap strictly after
-  * the data dir ([[IndexMeta.commit]]). A crash between the counts write
-  * and the meta flip leaves an invisible `b=K` (readers filter on the
-  * `[base, batches)` live window), re-written by the retry. [[compact]]
+  * one meta JSON committed through the [[graft.sources.StateFile]] swap
+  * strictly after the data dir ([[IndexMeta.commit]]). A crash between the
+  * counts write and the meta flip leaves an invisible `b=K` (readers filter
+  * on the `[base, batches)` live window), re-written by the retry. [[compact]]
   * folds the live generations into one and advances the base; superseded
   * dirs stay for one cycle (readers planned against the previous meta
   * keep reading) and are vacuumed by the NEXT compact — the

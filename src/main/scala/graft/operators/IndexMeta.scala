@@ -1,19 +1,20 @@
 package graft.operators
 
+import graft.sources.StateFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The shared meta commit/parse protocol of the persisted index family
-  * ([[JaccardIndex]], [[IvfIndex]], [[LshIndex]]): a single JSON file
-  * committed via tmp + rename (the capture-state swap — a crash between
-  * the delete and the rename leaves only the complete tmp, which is safe
-  * to adopt because the meta is written strictly after the data dirs),
-  * parsed back with a format-version check that tells skew apart from
-  * corruption. Extracted so a protocol fix lands once, not three times.
-  * [[JaccardIndex]] keeps its own parse (it carries legacy-layout
-  * detection and a double-typed field) but commits through [[commit]].
+  * ([[JaccardIndex]], [[IvfIndex]], [[LshIndex]]) and the maintained
+  * aggregates: a single JSON file committed through the
+  * [[graft.sources.StateFile]] swap strictly after the data dirs (so a
+  * complete tmp is safe to adopt), parsed back with a format-version check
+  * that tells skew apart from corruption. Extracted so a protocol fix
+  * lands once. [[JaccardIndex]] keeps its own parse (it carries
+  * legacy-layout detection and a double-typed field) but commits through
+  * [[commit]].
   */
-private[operators] object IndexMeta {
+private[graft] object IndexMeta {
 
   /** Per-INSTANCE parquet reader that remembers each relation shape's
     * schema: every relation of a persisted index is written by the
@@ -62,19 +63,12 @@ private[operators] object IndexMeta {
       schemas.keySet.removeIf(_.startsWith(dir + "#"))
   }
 
-  /** Commit `json` to `dir/file` via the tmp + rename single-file swap. */
-  def commit(spark: SparkSession, dir: String, file: String, json: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir, file + ".tmp")
-    val dst = new Path(dir, file)
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
-  }
+  /** Commit `json` to `dir/file` through the [[StateFile]] swap. */
+  def commit(spark: SparkSession, dir: String, file: String, json: String): Unit =
+    StateFile.write(spark, new Path(dir, file), json.getBytes("UTF-8"))
 
-  /** Read `dir/file` (with the crash-window tmp fallback) expecting format
-    * version `fmt` and the named integer fields, returned in order.
+  /** Read `dir/file` ([[StateFile.read]]) expecting format version `fmt`
+    * and the named integer fields, returned in order.
     * Behaviors shared by every index: a parseable meta of another format
     * is SKEW (rebuild-with-create error, never "corrupt"), a half-written
     * main file is corruption, a missing/torn tmp without a main file is
@@ -89,36 +83,20 @@ private[operators] object IndexMeta {
     */
   def load(spark: SparkSession, dir: String, file: String, fmt: Int,
            kind: String, fields: Seq[String],
-           compat: Map[Int, Map[String, Int]] = Map.empty): Seq[Int] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parse(p: Path, strict: Boolean): Option[Seq[Int]] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        def field(k: String): Option[String] =
-          """"%s"\s*:\s*(-?\d+)""".format(k).r.findFirstMatchIn(txt).map(_.group(1))
-        field("fmt") match {
-          case Some(v) if v.toInt != fmt && !compat.contains(v.toInt) =>
-            throw new IllegalStateException(
-              s"incompatible $kind index format under $dir (fmt $v; this build " +
-                s"reads fmt $fmt) — rebuild with create()")
-          case Some(v) =>
-            val defaults =
-              if (v.toInt == fmt) Map.empty[String, Int]
-              else compat(v.toInt)
-            val vals = fields.map(k => field(k).map(_.toInt).orElse(defaults.get(k)))
-            if (vals.forall(_.isDefined)) Some(vals.map(_.get))
-            else if (strict) throw new IllegalStateException(s"corrupt $p: $txt")
-            else None
-          case None =>
-            if (strict) throw new IllegalStateException(s"corrupt $p: $txt")
-            else None
-        }
+           compat: Map[Int, Map[String, Int]] = Map.empty): Seq[Int] =
+    StateFile.read(spark, new Path(dir, file)) { bytes =>
+      val txt = new String(bytes, "UTF-8")
+      def field(k: String): Option[String] =
+        """"%s"\s*:\s*(-?\d+)""".format(k).r.findFirstMatchIn(txt).map(_.group(1))
+      field("fmt").flatMap { v =>
+        if (v.toInt != fmt && !compat.contains(v.toInt))
+          throw new IllegalStateException(
+            s"incompatible $kind index format under $dir (fmt $v; this build " +
+              s"reads fmt $fmt) — rebuild with create()")
+        val defaults = if (v.toInt == fmt) Map.empty[String, Int] else compat(v.toInt)
+        val vals = fields.map(k => field(k).map(_.toInt).orElse(defaults.get(k)))
+        if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
       }
-    parse(new Path(dir, file), strict = true)
-      .orElse(parse(new Path(dir, file + ".tmp"), strict = false))
-      .getOrElse(throw new IllegalStateException(
-        s"no $kind index under $dir — run create() first"))
-  }
+    }.getOrElse(throw new IllegalStateException(
+      s"no $kind index under $dir — run create() first"))
 }

@@ -26,11 +26,9 @@ import org.apache.spark.sql.functions._
   *   dir/sets/b=K/q=J/      (id, wh)      sorted hash-set,  J = hash(id) mod P
   * }}}
   * Each batch writes its three additions under fresh `b=K` directories and
-  * then commits the meta file via tmp + rename (the same single-file swap as
-  * [[graft.sources.Incremental]]'s capture state, INCLUDING the reader-side
-  * tmp fallback in [[JaccardIndex.load]] — a crash between the delete and
-  * the rename leaves only the complete tmp, which is safe to adopt because
-  * the meta is written strictly after all three data dirs are committed).
+  * then commits the meta file through the [[graft.sources.StateFile]] swap,
+  * strictly after all three data dirs are committed (so [[JaccardIndex.load]]
+  * may adopt a complete tmp left without a meta file).
   * Readers filter `base <= b < committed batches` (`base` advances when
   * [[compact]] folds the live generations into one), so a crash mid-append
   * or mid-compact leaves invisible stray files that the next add simply
@@ -680,43 +678,29 @@ object JaccardIndex {
     (idx, firstSync)
   }
 
-  /** Open the committed index at `dir`. When the meta file is missing but a
-    * complete `.tmp` exists, the writer crashed between its delete and
-    * rename — the tmp IS the committed state (it is written strictly after
-    * all three `b=K` data dirs are fully committed), so fall back to it
-    * rather than refusing to load intact data (mirrors
-    * [[graft.sources.Incremental.readState]]).
-    */
+  /** Open the committed index at `dir` ([[graft.sources.StateFile.read]]). */
   def load(spark: SparkSession, dir: String): JaccardIndex = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parse(p: Path, strict: Boolean): Option[(Double, Int, Int, Int)] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        def field(k: String): Option[String] =
-          """"%s"\s*:\s*(-?[\d.Ee+-]+)""".format(k).r.findFirstMatchIn(txt).map(_.group(1))
-        def skew(found: String): Nothing = throw new IllegalStateException(
-          s"incompatible Jaccard index format under $dir ($found; this build " +
-            s"reads fmt $FormatVersion, hash-partitioned postings/sets) — " +
-            "rebuild with create()")
-        (field("threshold"), field("parts"), field("batches"), field("fmt")) match {
-          case (_, _, _, Some(v)) if v.toInt != FormatVersion => skew(s"fmt $v")
-          // "base" arrived with compact(); a fmt-2 meta without it is an
-          // uncompacted index — base 0, not corruption
-          case (Some(t), Some(pp), Some(b), _) => Some((t.toDouble, pp.toInt,
-            b.toInt, field("base").map(_.toInt).getOrElse(0)))
-          // a parseable meta without "parts" is not corruption — it is the
-          // old un-partitioned layout, which this build cannot probe
-          case (Some(_), None, Some(_), _) => skew("no fmt/parts fields")
-          case _ if strict => throw new IllegalStateException(s"corrupt $p: $txt")
-          case _ => None
-        }
+    val meta = graft.sources.StateFile.read(spark, new Path(dir, MetaFile)) { bytes =>
+      val txt = new String(bytes, "UTF-8")
+      def field(k: String): Option[String] =
+        """"%s"\s*:\s*(-?[\d.Ee+-]+)""".format(k).r.findFirstMatchIn(txt).map(_.group(1))
+      def skew(found: String): Nothing = throw new IllegalStateException(
+        s"incompatible Jaccard index format under $dir ($found; this build " +
+          s"reads fmt $FormatVersion, hash-partitioned postings/sets) — " +
+          "rebuild with create()")
+      (field("threshold"), field("parts"), field("batches"), field("fmt")) match {
+        case (_, _, _, Some(v)) if v.toInt != FormatVersion => skew(s"fmt $v")
+        // "base" arrived with compact(); a fmt-2 meta without it is an
+        // uncompacted index — base 0, not corruption
+        case (Some(t), Some(pp), Some(b), _) => Some((t.toDouble, pp.toInt,
+          b.toInt, field("base").map(_.toInt).getOrElse(0)))
+        // a parseable meta without "parts" is not corruption — it is the
+        // old un-partitioned layout, which this build cannot probe
+        case (Some(_), None, Some(_), _) => skew("no fmt/parts fields")
+        case _ => None
       }
-    val meta = parse(new Path(dir, MetaFile), strict = true)
-      .orElse(parse(new Path(dir, MetaFile + ".tmp"), strict = false))
-      .getOrElse(throw new IllegalStateException(
-        s"no Jaccard index under $dir — run create() first"))
+    }.getOrElse(throw new IllegalStateException(
+      s"no Jaccard index under $dir — run create() first"))
     new JaccardIndex(spark, dir, meta._1, meta._2, meta._3, meta._4)
   }
 

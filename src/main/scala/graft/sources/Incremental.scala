@@ -117,56 +117,31 @@ object Incremental {
   /** One poll's outcome. */
   case class PollResult(state: SyncState, rowsSynced: Long)
 
-  private val StateFile = "_graft_sync_state.json"
+  private val SyncStateFile = "_graft_sync_state.json"
 
-  /** Read the persisted capture state, if any. When the main file is
-    * missing but a complete `.tmp` exists, the writer crashed between its
-    * delete and rename — the tmp IS the next state (fully written and
-    * closed before the delete ever runs), so fall back to it rather than
-    * reporting "no state" (which would route the caller to a mode(overwrite)
-    * re-snapshot discarding mirror history). A tmp that fails to parse can
-    * only be a torn first-ever write (no main file was deleted yet in any
-    * later cycle) — genuinely no completed state.
+  /** Read the persisted capture state, if any ([[StateFile.read]]). A
+    * complete tmp without a main file is adopted rather than reporting "no
+    * state", which would route the caller to a mode(overwrite) re-snapshot
+    * discarding mirror history.
     */
-  def readState(spark: SparkSession, mirrorDir: String): Option[SyncState] = {
-    val fs = new Path(mirrorDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parse(p: Path, strict: Boolean): Option[SyncState] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        def field(k: String): Option[Long] =
-          """"%s"\s*:\s*(-?\d+)""".format(k).r.findFirstMatchIn(txt).map(_.group(1).toLong)
-        (field("watermark"), field("batchId"), field("syncedAtMs")) match {
-          case (Some(w), Some(b), Some(s)) =>
-            Some(SyncState(w, b, s, field("nBuckets").map(_.toInt).getOrElse(-1)))
-          case _ if strict => throw new IllegalStateException(s"corrupt $p: $txt")
-          case _ => None
-        }
-      }
-    parse(new Path(mirrorDir, StateFile), strict = true)
-      .orElse(parse(new Path(mirrorDir, StateFile + ".tmp"), strict = false))
-  }
+  def readState(spark: SparkSession, mirrorDir: String): Option[SyncState] =
+    StateFile.read(spark, new Path(mirrorDir, SyncStateFile)) { bytes =>
+      val txt = new String(bytes, "UTF-8")
+      def field(k: String): Option[Long] =
+        """"%s"\s*:\s*(-?\d+)""".format(k).r.findFirstMatchIn(txt).map(_.group(1).toLong)
+      for (w <- field("watermark"); b <- field("batchId"); s <- field("syncedAtMs"))
+        yield SyncState(w, b, s, field("nBuckets").map(_.toInt).getOrElse(-1))
+    }
 
-  private def writeState(spark: SparkSession, mirrorDir: String, st: SyncState): Unit = {
-    val dir = new Path(mirrorDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(mirrorDir, StateFile + ".tmp")
-    val dst = new Path(mirrorDir, StateFile)
-    val out = fs.create(tmp, true)
-    try out.write(
+  // a crash leaves the old state (re-poll is idempotent) or a tmp that
+  // readState ignores while the main file exists. Production targets would
+  // commit through a transactional table format instead.
+  private[graft] def writeState(spark: SparkSession, mirrorDir: String,
+                                st: SyncState): Unit =
+    StateFile.write(spark, new Path(mirrorDir, SyncStateFile),
       (s"""{"watermark":${st.watermark},"batchId":${st.batchId},""" +
         s""""syncedAtMs":${st.syncedAtMs},"nBuckets":${st.nBuckets}}""")
         .getBytes("UTF-8"))
-    finally out.close()
-    // single-file swap; a crash leaves the old state (re-poll is idempotent),
-    // a torn tmp (ignored — old state still present), or — between the
-    // delete and the rename — ONLY the complete tmp, which readState falls
-    // back to. Production targets would commit through a transactional
-    // table format instead.
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
-  }
 
   /** Initial full load (PeerDB's snapshot phase): stamp metadata, write the
     * bucketed mirror, persist the watermark = max(versionCol) of the

@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - every sync APPENDS its merged bucket files (fresh unique part names;
   *    nothing the running readers hold is deleted by the write itself), then
   *    commits `_graft_manifest.json` — the exact relative file list of the
-  *    mirror — via the same tmp + rename single-file swap as the capture
-  *    state, immediately before the state file (crash between the two: the
+  *    mirror — through the [[StateFile]] swap, like the capture state,
+  *    immediately before the state file (crash between the two: the
   *    manifest is the already-committed complete sync; the idempotent
   *    re-poll re-merges and re-commits).
   *  - readers ([[readCommitted]]) pin to the committed manifest: they see
@@ -82,20 +82,12 @@ object SyncManifest {
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read the committed manifest, if any, with the same crash-window tmp
-    * fallback as [[Incremental.readState]]: the tmp is adopted only when the
-    * main file is missing (writer crashed between delete and rename), and a
-    * torn tmp without a main file means no completed commit.
+  /** Read the committed manifest, if any ([[StateFile.read]]: a missing
+    * manifest falls back to a complete tmp, a torn tmp means no commit).
     */
-  def read(spark: SparkSession, dir: String): Option[Manifest] = {
-    val fs = fsOf(spark, dir)
-    def parse(p: Path, strict: Boolean): Option[Manifest] = {
-      val txt =
-        try {
-          if (!fs.exists(p)) return None
-          val in = fs.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        } catch { case _: java.io.FileNotFoundException => return None }
+  def read(spark: SparkSession, dir: String): Option[Manifest] =
+    StateFile.read(spark, new Path(dir, ManifestFile)) { bytes =>
+      val txt = new String(bytes, "UTF-8")
       def arr(k: String): Option[Seq[String]] =
         ("\"%s\"\\s*:\\s*\\[([^\\]]*)\\]".format(k)).r.findFirstMatchIn(txt)
           .map(m => "\"([^\"]*)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
@@ -116,68 +108,16 @@ object SyncManifest {
       val schemaB64 =
         """"schema"\s*:\s*"([A-Za-z0-9+/=]*)"""".r.findFirstMatchIn(txt)
           .map(_.group(1)).filter(_.nonEmpty)
-      (arr("files"), arr("retired")) match {
-        case (Some(f), Some(r)) => Some(Manifest(f, r, schemaB64))
-        case _ if strict => throw new IllegalStateException(s"corrupt $p: $txt")
-        case _ => None
-      }
+      for (f <- arr("files"); r <- arr("retired")) yield Manifest(f, r, schemaB64)
     }
-    parse(new Path(dir, ManifestFile), strict = true)
-      .orElse(parse(new Path(dir, ManifestFile + ".tmp"), strict = false))
-  }
 
   private def write(spark: SparkSession, dir: String, m: Manifest): Unit = {
-    val fs = fsOf(spark, dir)
-    val tmp = new Path(dir, ManifestFile + ".tmp")
-    val dst = new Path(dir, ManifestFile)
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val schemaField =
       m.schemaB64.map(b => s""","schema":"$b"""").getOrElse("")
-    val out = fs.create(tmp, true)
-    try out.write(
+    StateFile.write(spark, new Path(dir, ManifestFile),
       s"""{"fmt":$FormatVersion,"files":${arr(m.files)},"retired":${arr(m.retired)}$schemaField}"""
         .getBytes("UTF-8"))
-    finally out.close()
-    // ATOMIC swap: rename-with-overwrite via FileContext (local FS and HDFS
-    // implement it as an atomic replace), so a concurrent readCommitted
-    // never observes the no-manifest third state that a delete-then-rename
-    // opens — that state falls back to a raw directory read listing retired
-    // generations and unadopted debris, and is not grace-translated.
-    // Filesystems without FileContext support fall back to the old
-    // delete+rename (readCommitted's vanish-retry covers that window).
-    val fc =
-      try Some(org.apache.hadoop.fs.FileContext.getFileContext(
-        dst.toUri, spark.sparkContext.hadoopConfiguration))
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None
-      }
-    fc match {
-      case Some(c) =>
-        // the rename of the DATA file is atomic, but ChecksumFs moves the
-        // `.crc` sidecar in a SECOND rename — a concurrent reader in that
-        // window validates the new data against the old sidecar and dies
-        // with a ChecksumException. Drop both sidecars (via the raw FS —
-        // the checksum layer hides them) before the swap: a missing crc
-        // simply skips verification, and the manifest's own fmt/shape
-        // checks already catch torn content.
-        val raw = fs match {
-          case cfs: org.apache.hadoop.fs.ChecksumFileSystem => cfs.getRawFileSystem
-          case f => f
-        }
-        def dropCrc(p: Path): Unit = {
-          val crc = new Path(p.getParent, "." + p.getName + ".crc")
-          try raw.delete(crc, false)
-          catch { case _: java.io.IOException => () }
-        }
-        dropCrc(tmp)
-        dropCrc(dst)
-        c.rename(fs.makeQualified(tmp), fs.makeQualified(dst),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      case None =>
-        if (fs.exists(dst)) fs.delete(dst, false)
-        if (!fs.rename(tmp, dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    }
   }
 
   /** Relative paths of the visible parquet data files under `dir`,
@@ -336,7 +276,7 @@ object SyncManifest {
     * planning-time listing inside this method is already translated).
     */
   def readCommitted(spark: SparkSession, dir: String): DataFrame =
-    readWithVanishRetry(spark, dir) match {
+    read(spark, dir) match {
       case Some(m) if m.files.nonEmpty =>
         // a stored schema skips the per-read footer-inference Spark job;
         // older kept files missing newly-added columns read them as null
@@ -352,32 +292,6 @@ object SyncManifest {
       // is "no mirror", not a grace overrun
       case _ => spark.read.parquet(dir)
     }
-
-  /** [[read]], but when the manifest is ABSENT for a dir that plainly has
-    * committed parquet data, retry briefly before giving up: on filesystems
-    * whose [[write]] falls back to delete-then-rename (no FileContext
-    * atomic overwrite), a concurrent commit opens a short no-manifest
-    * window, and falling through to the raw directory read there would
-    * list retired generations and unadopted debris un-grace-translated.
-    * Genuinely pre-manifest mirrors (no manifest was EVER committed) pay
-    * only the retries' latency once per read, and only when data exists.
-    */
-  private def readWithVanishRetry(spark: SparkSession,
-                                  dir: String): Option[Manifest] = {
-    // the delete→rename window is microseconds — two short retries cover
-    // it; a genuinely pre-manifest mirror pays ≤50 ms per read, once
-    var attempt = 0
-    while (true) {
-      val m = read(spark, dir)
-      if (m.isDefined || attempt >= 2) return m
-      // only a dir with visible committed parquet could be mid-swap;
-      // an empty/absent dir is simply "no mirror"
-      if (!graft.streaming.CdcStream.hasVisibleParquet(spark, dir)) return m
-      attempt += 1
-      Thread.sleep(25L)
-    }
-    None // unreachable
-  }
 
   /** Run `action` (typically an action on a held [[readCommitted]] frame)
     * translating a vanished-pinned-file failure into the manifest-grace

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import graft.operators.StatTests
+import graft.sources.StateFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,8 +27,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * fan-out runs on the batch's unit grain, map-side combined, and exactly
   * B tiny rows cross the driver per trigger. Durable scalar state is the
   * B (Σw, Σwx) pairs (sums as BigInt — a wrap would corrupt the interval
-  * silently) plus (n_units, Σx), swapped atomically (write-temp +
-  * ATOMIC_MOVE, the SyncManifest convention). At-least-once safe: a
+  * silently) plus (n_units, Σx), swapped atomically through
+  * [[graft.sources.StateFile]]. At-least-once safe: a
   * replayed batch id re-OVERWRITES its own units delta and is skipped by
   * the state's high-water mark.
   *
@@ -42,34 +44,31 @@ object BootstrapStream {
   private case class St(batchId: Long, nUnits: Long, sx: Long,
                         sw: Array[Long], swx: Array[BigInt])
 
-  private def stPath(dir: String) = Paths.get(dir, "bootstrap_state.txt")
+  private def stPath(dir: String) =
+    new Path(Paths.get(dir, "bootstrap_state.txt").toUri)
 
-  private def load(dir: String, b: Int): St = {
-    val p = stPath(dir)
-    if (!Files.exists(p))
-      St(-1L, 0L, 0L, Array.fill(b)(0L), Array.fill(b)(BigInt(0)))
-    else {
-      val kv = Files.readString(p).linesIterator
+  private def load(spark: SparkSession, dir: String, b: Int): St = {
+    val st = StateFile.read(spark, stPath(dir)) { bytes =>
+      // every line ends in a newline, so a torn write is one without it
+      val txt = new String(bytes, "UTF-8")
+      val kv = txt.linesIterator
         .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-      val sw = kv("sw").split(",").map(_.toLong)
-      val swx = kv("swx").split(",").map(BigInt(_))
-      require(sw.length == b && swx.length == b,
-        s"state holds ${sw.length} replicates, monitor configured for $b " +
-          "— B is part of the monitor's identity and cannot change mid-run")
-      St(kv("batch_id").toLong, kv("n_units").toLong, kv("sx").toLong,
-        sw, swx)
-    }
+      if (!txt.endsWith("\n")) None
+      else scala.util.Try(St(kv("batch_id").toLong, kv("n_units").toLong,
+        kv("sx").toLong, kv("sw").split(",").map(_.toLong),
+        kv("swx").split(",").map(BigInt(_)))).toOption
+    }.getOrElse(St(-1L, 0L, 0L, Array.fill(b)(0L), Array.fill(b)(BigInt(0))))
+    require(st.sw.length == b && st.swx.length == b,
+      s"state holds ${st.sw.length} replicates, monitor configured for $b " +
+        "— B is part of the monitor's identity and cannot change mid-run")
+    st
   }
 
-  private def save(dir: String, st: St): Unit = {
-    val body = s"batch_id=${st.batchId}\nn_units=${st.nUnits}\n" +
-      s"sx=${st.sx}\nsw=${st.sw.mkString(",")}\n" +
-      s"swx=${st.swx.mkString(",")}\n"
-    val tmp = Paths.get(dir, ".bootstrap_state.tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, stPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def save(spark: SparkSession, dir: String, st: St): Unit =
+    StateFile.write(spark, stPath(dir),
+      (s"batch_id=${st.batchId}\nn_units=${st.nUnits}\n" +
+        s"sx=${st.sx}\nsw=${st.sw.mkString(",")}\n" +
+        s"swx=${st.swx.mkString(",")}\n").getBytes("UTF-8"))
 
   private def rnd6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -82,7 +81,7 @@ object BootstrapStream {
                                batchId: Long, unit: Column, cents: Column,
                                b: Int, alphaPermille: Int): Unit = {
     val spark = batch.sparkSession
-    val prev = load(stateDir, b)
+    val prev = load(spark, stateDir, b)
     if (batchId <= prev.batchId) return
     val unitsDir = Paths.get(stateDir, "units").toString
     // batch unit grain: one distributed pass over the events
@@ -145,14 +144,12 @@ object BootstrapStream {
         val hi = rnd6(means(hiRn - 1)._1 / 100.0)
         val line = s"""{"batch_id":$batchId,"n_units":${st.nUnits},""" +
           s""""mean":$mean,"ci_lo":$lo,"ci_hi":$hi}"""
-        val tmp = Paths.get(stateDir, s".readout_$batchId.tmp")
-        Files.writeString(tmp, line + "\n")
-        Files.move(tmp, Paths.get(stateDir, f"readout_$batchId%06d.json"),
-          StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
+        StateFile.write(spark,
+          new Path(Paths.get(stateDir, f"readout_$batchId%06d.json").toUri),
+          (line + "\n").getBytes("UTF-8"))
       }
     }
-    save(stateDir, st)
+    save(spark, stateDir, st)
   }
 
   private def listUnitFiles(unitsDir: String, exceptBatch: Long): List[String] = {

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
+import graft.sources.StateFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -20,7 +22,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * at 10⁹ events/batch as at 10³; cumulative state is six exact integers
   * plus the running p. At-least-once safe: a replayed batch id is skipped
   * (state carries the high-water mark), and the state file swaps
-  * atomically (write-temp + ATOMIC_MOVE, the SyncManifest convention).
+  * atomically through [[graft.sources.StateFile]].
   *
   * Exactness: cumulative moments are exact integers (counts/sums as
   * longs, squares as BigInt — a wrap would corrupt the llr silently), and
@@ -36,29 +38,25 @@ object MsprtStream {
   private case class St(batchId: Long, na: Long, sa: Long, ssa: BigInt,
                         nb: Long, sb: Long, ssb: BigInt, pRun: Double)
 
-  private def stPath(dir: String) = Paths.get(dir, "msprt_state.txt")
+  private def stPath(dir: String) = new Path(Paths.get(dir, "msprt_state.txt").toUri)
 
-  private def load(dir: String): St = {
-    val p = stPath(dir)
-    if (!Files.exists(p)) St(-1L, 0L, 0L, BigInt(0), 0L, 0L, BigInt(0), 1.0)
-    else {
-      val kv = Files.readString(p).linesIterator
+  private def load(spark: SparkSession, dir: String): St =
+    StateFile.read(spark, stPath(dir)) { bytes =>
+      // every line ends in a newline, so a torn write is one without it
+      val txt = new String(bytes, "UTF-8")
+      val kv = txt.linesIterator
         .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-      St(kv("batch_id").toLong, kv("na").toLong, kv("sa").toLong,
-        BigInt(kv("ssa")), kv("nb").toLong, kv("sb").toLong,
-        BigInt(kv("ssb")), kv("p_run").toDouble)
-    }
-  }
+      if (!txt.endsWith("\n")) None
+      else scala.util.Try(St(kv("batch_id").toLong, kv("na").toLong,
+        kv("sa").toLong, BigInt(kv("ssa")), kv("nb").toLong, kv("sb").toLong,
+        BigInt(kv("ssb")), kv("p_run").toDouble)).toOption
+    }.getOrElse(St(-1L, 0L, 0L, BigInt(0), 0L, 0L, BigInt(0), 1.0))
 
-  private def save(dir: String, st: St): Unit = {
-    val body = s"batch_id=${st.batchId}\nna=${st.na}\nsa=${st.sa}\n" +
-      s"ssa=${st.ssa}\nnb=${st.nb}\nsb=${st.sb}\nssb=${st.ssb}\n" +
-      s"p_run=${st.pRun}\n"
-    val tmp = Paths.get(dir, s".msprt_state.tmp")
-    Files.writeString(tmp, body)
-    Files.move(tmp, stPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def save(spark: SparkSession, dir: String, st: St): Unit =
+    StateFile.write(spark, stPath(dir),
+      (s"batch_id=${st.batchId}\nna=${st.na}\nsa=${st.sa}\n" +
+        s"ssa=${st.ssa}\nnb=${st.nb}\nsb=${st.sb}\nssb=${st.ssb}\n" +
+        s"p_run=${st.pRun}\n").getBytes("UTF-8"))
 
   private def rnd6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -70,7 +68,7 @@ object MsprtStream {
   private[graft] def foldBatch(stateDir: String, batch: DataFrame,
                                    batchId: Long, unit: Column,
                                    cents: Column, tauCents: Double): Unit = {
-    val prev = load(stateDir)
+    val prev = load(batch.sparkSession, stateDir)
     if (batchId <= prev.batchId) return
     val dec = (c: Column) => c.cast("decimal(19,0)")
     val m = batch
@@ -105,14 +103,12 @@ object MsprtStream {
           s""""n_b":${st.nb},"mean_delta":${rnd6(dc / 100.0)},""" +
           s""""llr":${rnd6(llr)},"p_always_valid":$pAv,""" +
           s""""p_running":${st.pRun}}"""
-        val tmp = Paths.get(stateDir, s".readout_$batchId.tmp")
-        Files.writeString(tmp, line + "\n")
-        Files.move(tmp, Paths.get(stateDir, f"readout_$batchId%06d.json"),
-          StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
+        StateFile.write(batch.sparkSession,
+          new Path(Paths.get(stateDir, f"readout_$batchId%06d.json").toUri),
+          (line + "\n").getBytes("UTF-8"))
       }
     }
-    save(stateDir, st)
+    save(batch.sparkSession, stateDir, st)
   }
 
   /** Start the monitor on a streaming frame of experiment events. */

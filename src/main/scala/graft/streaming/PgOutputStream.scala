@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sources.PgOutput
+import graft.sources.{PgOutput, StateFile}
 import graft.sources.PgOutput.{Relation, RelationAt, XLogData}
 
 /** Continuous pgoutput capture: the flow-worker loop the reference runs
@@ -21,9 +21,10 @@ import graft.sources.PgOutput.{Relation, RelationAt, XLogData}
   * Relation frames, written with [[PgOutput.Fixture.relation]] and read
   * back through [[PgOutput.decodeFrame]]) — durable state goes through the
   * same decoder the stream does, so there is no second serialization
-  * format to drift. Single-file temp+rename swap, crash-safe the same way
-  * as the poll-state file: a torn write leaves the old registry, and a
-  * replayed batch re-learns its own Relation messages from its frames.
+  * format to drift. It and the confirmed-flush LSN go through the
+  * [[graft.sources.StateFile]] swap, like the poll-state file: a crash
+  * leaves the old registry, and a replayed batch re-learns its own
+  * Relation messages from its frames.
   *
   * Ordering contract: the registry is written AFTER the mirror commit.
   * Either crash window converges on replay — the mirror upsert is
@@ -230,7 +231,8 @@ object PgOutputStream {
           }
           CdcStream.upsertBatch(spark, upserts,
             keys, "_version", targetDir, nBuckets)
-          writeRegistry(spark, stateDir, table, parsed.relations)
+          if (parsed.relations.toSet != prior.toSet)
+            writeRegistry(spark, stateDir, table, parsed.relations)
           // feedback bookkeeping LAST (after the mirror + registry are
           // durable): the confirmed-flush LSN advances to the batch's max
           // frame walEnd, but ONLY when nothing was lost — dead-lettered
@@ -262,18 +264,15 @@ object PgOutputStream {
     * where the server resumes the slot.
     */
   def readConfirmedLsn(spark: SparkSession, targetDir: String,
-                       table: String): Long = {
-    val p = confirmedLsnPath(targetDir, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    val in = fs.open(p)
-    try in.readLong() finally in.close()
-  }
+                       table: String): Long =
+    StateFile.read(spark, confirmedLsnPath(targetDir, table)) { bytes =>
+      if (bytes.length == 8) Some(java.nio.ByteBuffer.wrap(bytes).getLong) else None
+    }.getOrElse(0L)
 
-  /** Monotonically advance the confirmed-flush LSN (temp+rename, same
-    * crash contract as the registry). Re-acking an already-confirmed LSN
-    * is a no-op — the crash-replay path re-processes a batch whose LSN was
-    * already confirmed and must not regress or churn the file.
+  /** Monotonically advance the confirmed-flush LSN (same crash contract
+    * as the registry). Re-acking an already-confirmed LSN is a no-op —
+    * the crash-replay path re-processes a batch whose LSN was already
+    * confirmed and must not regress or churn the file.
     *
     * @return true when the stored LSN actually advanced
     */
@@ -281,13 +280,8 @@ object PgOutputStream {
                           table: String, lsn: Long): Boolean = {
     val current = readConfirmedLsn(spark, targetDir, table)
     if (lsn <= current) return false
-    val dst = confirmedLsnPath(targetDir, table)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = dst.suffix(".tmp")
-    val out = fs.create(tmp, true)
-    try out.writeLong(lsn) finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
+    StateFile.write(spark, confirmedLsnPath(targetDir, table),
+      java.nio.ByteBuffer.allocate(8).putLong(lsn).array())
     true
   }
 
@@ -372,50 +366,34 @@ object PgOutputStream {
   def readRegistry(spark: SparkSession, targetDir: String,
                    table: String): Seq[RelationAt] = {
     val p = registryPath(targetDir, table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val bytes =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](64 * 1024)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toByteArray
-      } finally in.close()
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val out = Seq.newBuilder[RelationAt]
-    while (bb.remaining() >= 4) {
-      val len = bb.getInt
-      require(len > 0 && len <= bb.remaining(), s"corrupt registry $p")
-      val frame = new Array[Byte](len)
-      bb.get(frame)
-      PgOutput.decodeFrame(frame) match {
-        case Right(XLogData(walStart, _, _, Relation(relid, _, name, _, cols)))
-          if name == table => out += RelationAt(walStart, relid, cols)
-        case other => throw new IllegalStateException(
-          s"corrupt registry $p: unexpected entry $other")
+    StateFile.read(spark, p) { bytes =>
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      val out = Seq.newBuilder[RelationAt]
+      def nextLen = if (bb.remaining() >= 4) bb.getInt(bb.position()) else 0
+      while (nextLen > 0 && nextLen <= bb.remaining() - 4) {
+        val frame = new Array[Byte](bb.getInt)
+        bb.get(frame)
+        PgOutput.decodeFrame(frame) match {
+          case Right(XLogData(walStart, _, _, Relation(relid, _, name, _, cols)))
+            if name == table => out += RelationAt(walStart, relid, cols)
+          case other => throw new IllegalStateException(
+            s"corrupt registry $p: unexpected entry $other")
+        }
       }
-    }
-    out.result()
+      // bytes left over that hold no whole frame: a torn write
+      if (bb.hasRemaining) None else Some(out.result())
+    }.getOrElse(Nil)
   }
 
-  private def writeRegistry(spark: SparkSession, targetDir: String,
-                            table: String, rels: Seq[RelationAt]): Unit = {
-    val dst = registryPath(targetDir, table)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = dst.suffix(".tmp")
-    val out = fs.create(tmp, true)
-    try {
-      val bb = new java.io.DataOutputStream(out)
-      rels.sortBy(_.walStart).foreach { r =>
-        val frame = PgOutput.Fixture.relation(r.walStart, r.relid, "", table, r.cols)
-        bb.writeInt(frame.length)
-        bb.write(frame)
-      }
-      bb.flush()
-    } finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"rename $tmp -> $dst failed")
+  private[graft] def writeRegistry(spark: SparkSession, targetDir: String,
+                                   table: String, rels: Seq[RelationAt]): Unit = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(buf)
+    rels.sortBy(_.walStart).foreach { r =>
+      val frame = PgOutput.Fixture.relation(r.walStart, r.relid, "", table, r.cols)
+      out.writeInt(frame.length)
+      out.write(frame)
+    }
+    StateFile.write(spark, registryPath(targetDir, table), buf.toByteArray)
   }
 }
