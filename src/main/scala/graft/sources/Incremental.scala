@@ -868,9 +868,6 @@ final class MultiTableMirror(spark: SparkSession, tables: Seq[TableConfig],
   def readFinal(table: String): DataFrame = {
     val cfg = tables.find(_.table == table).getOrElse(
       throw new IllegalArgumentException(s"table $table not in mirror config"))
-    graft.operators.CdcOps
-      .latestSnapshot(SyncManifest.readCommitted(spark, mirrorDir(table)),
-        cfg.keys, "_peerdb_version")
-      .where(col("_peerdb_is_deleted") === 0)
+    Mirror.readFinal(spark, mirrorDir(table), cfg.keys: _*)
   }
 }

@@ -48,9 +48,9 @@ object Mirror {
     * ReplacingMergeTree FINAL over the bucketed layout, pinned to the last
     * committed sync (never a mix of two syncs mid-merge).
     */
-  def readFinal(spark: SparkSession, targetDir: String, keyCol: String): DataFrame =
+  def readFinal(spark: SparkSession, targetDir: String, keys: String*): DataFrame =
     graft.operators.CdcOps
-      .latestSnapshot(readCommitted(spark, targetDir), Seq(keyCol), "_peerdb_version")
+      .latestSnapshot(readCommitted(spark, targetDir), keys, "_peerdb_version")
       .where(col("_peerdb_is_deleted") === 0)
 
   /** Mirror consistency report — the monitor's source-vs-target row-count

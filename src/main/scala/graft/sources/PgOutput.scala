@@ -676,7 +676,7 @@ object PgOutput extends Serializable {
     * state to persist for the next batch) + the batch's committed
     * truncates of this table (apply with [[applyTruncates]] for a log
     * collapse, or tombstone the mirror below the truncate LSN — see
-    * [[graft.streaming.PgOutputStream.mirrorFrames]]).
+    * [[graft.streaming.PgOutputStream.syncFrames]]).
     */
   final case class Parsed(changes: DataFrame, deadLetter: DataFrame,
                           relations: Seq[RelationAt],

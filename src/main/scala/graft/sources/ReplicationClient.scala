@@ -5,9 +5,7 @@ import java.net.Socket
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.{Encoders, SparkSession}
 
 import graft.streaming.PgOutputStream
 
@@ -16,8 +14,10 @@ import graft.streaming.PgOutputStream
   * a replication connection continuously (docker-compose.yml:21-28),
   * pumping XLogData frames one way and Standby Status Updates the other.
   * Everything below the socket already exists in this library
-  * ([[PgOutput]] decode + ack codec, [[PgOutputStream]] mirror loop +
+  * ([[PgOutput]] decode + ack codec, [[PgOutputStream]] per-batch sync +
   * durable confirmed-flush LSN); this class owns the connection lifecycle.
+  * State follows the capture layout: the mirror is `targetDir/<table>`,
+  * the registry and confirmed-flush LSN sit in `targetDir`.
   *
   * Wire framing: the minimal FE/BE subset a replication session uses after
   * authentication — `Q` (simple query: the START_REPLICATION command),
@@ -33,10 +33,12 @@ import graft.streaming.PgOutputStream
   *    or disconnect resumes exactly at the last acked position, and the
   *    server re-sends the unacked tail (at-least-once; the mirror's
   *    replay-idempotent upsert converges);
-  *  - frames spool to `spoolDir` and sync through ONE checkpointed
-  *    [[PgOutputStream.mirrorFrames]] pass per batch (AvailableNow) — the
-  *    ack is sent only AFTER that pass returns, i.e. after the mirror
-  *    commit and the LSN file are durable; acking first could lose WAL;
+  *  - each batch of frames syncs through the same per-batch body the
+  *    streaming loop runs ([[PgOutputStream.mirrorFramesMulti]]), with the
+  *    confirmed LSN it starts from as its batch id (durable, never
+  *    decreasing across reconnects) — the ack is sent only AFTER that
+  *    sync returns, i.e. after the mirror commit and the LSN file are
+  *    durable; acking first could lose WAL;
   *  - a server keepalive with the reply-requested bit is answered
   *    INLINE ([[PgOutputStream.replyTo]]) — it is the server's liveness
   *    deadline, and batch cadence is too slow for it;
@@ -46,18 +48,21 @@ import graft.streaming.PgOutputStream
   *
   * Scale: the client is a single-connection driver-side pump by protocol
   * design (one slot = one ordered WAL stream); throughput work — decode,
-  * merge, commit — all happens in the Spark jobs `mirrorFrames` runs, so
-  * the socket loop only moves bytes. Multiple tables multiplex over ONE
-  * stream (relid-tagged), see the multi-table variant of the mirror loop.
+  * merge, commit — all happens in the Spark jobs the sync runs, so the
+  * socket loop only moves bytes. DML for any table but `table` is counted
+  * and, with `deadRoot` set, dead-lettered under
+  * `deadRoot/_unmatched_relid`.
   */
 final class ReplicationClient(spark: SparkSession, host: String, port: Int,
                               slot: String, table: String, keys: Seq[String],
-                              targetDir: String, spoolDir: String,
-                              checkpointDir: String, nBuckets: Int = 16,
+                              targetDir: String, nBuckets: Int = 16,
                               batchMaxFrames: Int = 256,
-                              deadDir: Option[String] = None,
+                              deadRoot: Option[String] = None,
                               clock: () => Long = () => System.currentTimeMillis() * 1000L) {
   import ReplicationClient._
+
+  private val sync = PgOutputStream.syncFrames(spark, "frame",
+    Seq(PgOutputStream.TableSpec(table, keys, nBuckets)), targetDir, deadRoot)
 
   /** The durable confirmed-flush LSN (0 = nothing confirmed yet). */
   def confirmedLsn: Long = PgOutputStream.readConfirmedLsn(spark, targetDir, table)
@@ -135,7 +140,7 @@ final class ReplicationClient(spark: SparkSession, host: String, port: Int,
         received
       } catch {
         case _: EOFException =>
-          // dropped connection: spool what arrived (replay-idempotent),
+          // dropped connection: sync what arrived (replay-idempotent),
           // resume from the durable LSN on the next connection
           flush(None)
           received
@@ -143,22 +148,11 @@ final class ReplicationClient(spark: SparkSession, host: String, port: Int,
     } finally sock.close()
   }
 
-  /** Spool one batch and run one checkpointed mirror pass over the spool —
-    * only the newly spooled files process (file-source + checkpoint), and
-    * the pass returns after the mirror commit + LSN advance are durable.
+  /** Sync one batch; returns after the mirror commit + LSN advance are
+    * durable.
     */
-  private def syncBatch(frames: Seq[Array[Byte]]): Unit = {
-    spark.createDataset(frames)(org.apache.spark.sql.Encoders.BINARY)
-      .toDF("frame")
-      .coalesce(1).write.mode("append").parquet(spoolDir)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("frame", BinaryType))))
-      .parquet(spoolDir)
-    val q = PgOutputStream.mirrorFrames(stream, "frame", table, keys,
-      targetDir, checkpointDir, deadDir = deadDir, nBuckets = nBuckets,
-      trigger = Trigger.AvailableNow())
-    q.awaitTermination()
-  }
+  private def syncBatch(frames: Seq[Array[Byte]]): Unit =
+    sync(spark.createDataset(frames)(Encoders.BINARY).toDF("frame"), confirmedLsn)
 }
 
 object ReplicationClient {

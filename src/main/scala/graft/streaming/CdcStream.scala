@@ -378,16 +378,33 @@ object CdcStream {
   def upsertPinnedMulti(spark: SparkSession, pinned: DataFrame,
                         keys: Seq[String], versionCol: String,
                         targets: Seq[UpsertTarget]): Unit = {
-    if (targets.isEmpty) return
     require(targets.map(_.dir).distinct.size == targets.size,
       s"upsertPinnedMulti: duplicate target dirs ${targets.map(_.dir)}")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val work = targets.map(t => Future(upsertOneTarget(spark, pinned, keys,
-      versionCol, t)))
-    Await.result(Future.sequence(work), scala.concurrent.duration.Duration.Inf)
-    ()
+    concurrently(spark, targets.map(t => () =>
+      upsertOneTarget(spark, pinned, keys, versionCol, t)))
   }
+
+  /** Run `tasks` concurrently (one task inline), each on a thread that
+    * carries the calling thread's Spark local properties and active
+    * session — a streaming query's job group and SQL execution cover every
+    * job the tasks start. Returns when all are done; rethrows the first
+    * failure.
+    */
+  private[graft] def concurrently(spark: SparkSession,
+                                  tasks: Seq[() => Unit]): Unit =
+    if (tasks.size == 1) tasks.head()
+    else if (tasks.nonEmpty) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+      try tasks
+        .map(t => org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(t()))
+        .map(f => scala.util.Try(f.get()))
+        .foreach(_.failed.foreach {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+          case e => throw e
+        })
+      finally pool.shutdown()
+    }
 
   private[graft] def upsertOneTarget(spark: SparkSession, pinned: DataFrame,
                                      keys: Seq[String], versionCol: String,

@@ -9,13 +9,21 @@ import graft.sources.{PgOutput, StateFile}
 import graft.sources.PgOutput.{Relation, RelationAt, XLogData}
 
 /** Continuous pgoutput capture: the flow-worker loop the reference runs
-  * against a replication slot (docker-compose.yml:21-28), re-expressed as a
-  * Structured Streaming `foreachBatch` over a landing stream of raw
-  * replication frames — decode ([[PgOutput.parse]]) → dead-letter →
-  * mirror upsert ([[CdcStream.upsertBatch]], newest `_version` = LSN per
-  * key), with the relation-schema registry persisted ACROSS batches:
-  * pgoutput sends `Relation` only on change or reconnect, so a microbatch
-  * of bare DML must decode under schemas learned batches ago.
+  * against a replication slot (docker-compose.yml:21-28). One per-batch
+  * body ([[syncFrames]]) turns a batch of raw replication frames into
+  * mirror commits — decode ([[PgOutput.parse]]) → dead-letter → mirror
+  * upsert ([[CdcStream.upsertBatch]], newest `_version` = LSN per key) →
+  * relation registry → confirmed-flush LSN. [[mirrorFramesMulti]] runs it
+  * as a Structured Streaming `foreachBatch` over a landing stream of
+  * frames; [[graft.sources.ReplicationClient]] calls it directly on each
+  * batch it reads off the socket.
+  *
+  * One layout: under a capture root `<root>`, table `t`'s mirror is
+  * `<root>/t` and its state is `<root>/_pg_relations_t.bin` (the relation
+  * registry) and `<root>/_pg_confirmed_lsn_t.bin` (the confirmed-flush
+  * LSN). The registry persists ACROSS batches: pgoutput sends `Relation`
+  * only on change or reconnect, so a batch of bare DML must decode under
+  * schemas learned batches ago.
   *
   * The registry file reuses the WIRE format itself (length-prefixed
   * Relation frames, written with [[PgOutput.Fixture.relation]] and read
@@ -33,224 +41,189 @@ import graft.sources.PgOutput.{Relation, RelationAt, XLogData}
   */
 object PgOutputStream {
 
-  /** Start the capture loop. `frames` is a streaming DataFrame whose
-    * `dataCol` holds raw replication frames (one CopyData payload per
-    * row); `deadDir`, when set, accumulates undecodable frames as parquet
-    * (frame + reason + batch id) for replay.
-    */
-  def mirrorFrames(frames: DataFrame, dataCol: String, table: String,
-                   keys: Seq[String], targetDir: String, checkpointDir: String,
-                   deadDir: Option[String] = None, nBuckets: Int = 64,
-                   trigger: Trigger = Trigger.AvailableNow(),
-                   healToast: Boolean = true): StreamingQuery = {
-    val spark = frames.sparkSession
-    frames.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          syncTableBatch(spark, batch, dataCol, table, keys, targetDir,
-            deadDir, nBuckets, healToast, batchId)
-      }
-      .start()
-  }
-
   /** One mirrored table of a multiplexed capture stream. */
   final case class TableSpec(table: String, keys: Seq[String], nBuckets: Int = 64)
 
-  /** Multi-table capture from ONE multiplexed frame stream — a postgres
-    * publication usually carries several tables over a single slot, and
-    * running [[mirrorFrames]] per table would decode every frame once PER
-    * TABLE. Here each microbatch is tagged in a single decode pass
-    * ([[PgOutput.tagRelids]]): every DML/Relation frame learns the one
-    * relid it belongs to (TRUNCATE its list), transaction-control frames
-    * belong to all tables, and the driver resolves table names to relid
-    * sets from the batch's own Relation frames plus each table's
-    * persisted registry. Each table then syncs from its OWN frame subset
-    * (its relids + the shared control frames) through the exact
-    * single-table body ([[syncTableBatch]]): per-table mirror under
-    * `targetDir/<table>`, per-table registry, per-table dead-letter under
-    * `deadRoot/<table>`, per-table confirmed-flush LSN. The per-table
-    * syncs touch disjoint directories and run CONCURRENTLY, the
-    * [[graft.operators.MaterializedJoin]] pattern.
-    *
-    * A DML frame whose relid maps to NO named table is counted and logged
-    * per batch (and dead-lettered under `deadRoot/_unmatched_relid` when a
-    * deadRoot is set) — unlike the single-table loop, where other tables'
-    * DML is explicitly out of scope, a multi-table spec NAMES the full
-    * intended capture set, so unmatched DML here usually means a typo'd
-    * table name silently losing a whole table's changes while its LSN
-    * still advances via control frames. Broken frames reach EVERY table's
-    * dead-letter (loud beats lost).
+  /** Start the capture loop: [[syncFrames]] over each microbatch of
+    * `frames`, a streaming DataFrame whose `dataCol` holds raw replication
+    * frames (one CopyData payload per row). Mirrors and state land under
+    * `targetDir` (see the layout above); `deadRoot`, when set,
+    * accumulates undecodable frames as parquet under `deadRoot/<table>`.
     */
   def mirrorFramesMulti(frames: DataFrame, dataCol: String,
                         tables: Seq[TableSpec], targetDir: String,
                         checkpointDir: String,
                         deadRoot: Option[String] = None,
-                        trigger: Trigger = Trigger.AvailableNow(),
-                        healToast: Boolean = true): StreamingQuery = {
-    require(tables.nonEmpty, "mirrorFramesMulti needs at least one table")
-    require(tables.map(_.table).distinct.size == tables.size,
-      s"duplicate table names in ${tables.map(_.table)}")
-    val spark = frames.sparkSession
+                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     frames.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val tagged = PgOutput.tagRelids(batch, dataCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // name → relids: the batch's own Relation frames (one small
-            // collect over the pinned tagged batch) + each persisted
-            // registry (pgoutput re-describes a relation only on change
-            // or reconnect — bare-DML batches resolve via the registry)
-            val batchPairs = tagged.where(col("rel_name").isNotNull)
-              .select(col("rel_name"), element_at(col("relids"), 1).as("relid"))
-              .distinct().collect()
-              .map(r => (r.getString(0), r.getInt(1)))
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            implicit val ec: ExecutionContext = ExecutionContext.global
-            val perTable = tables.map { t =>
-              t -> (batchPairs.collect { case (n, r) if n == t.table => r } ++
-                readRegistry(spark, targetDir, t.table).map(_.relid)).toSet
-            }
-            // misconfiguration tripwire: DML whose relid matches NO
-            // configured table would otherwise vanish while the LSN still
-            // advances — count it, log it, and dead-letter it when a dead
-            // root exists (its own subdir: the reason schema differs from
-            // the parse dead-letter's)
-            val allRelids = perTable.flatMap(_._2).toSet
-            val unmatched = tagged.where(col("rel_name").isNull &&
-              size(col("relids")) > 0 &&
-              (if (allRelids.isEmpty) lit(true)
-               else !arrays_overlap(col("relids"),
-                 lit(allRelids.toArray.sorted))))
-            val nUnmatched = unmatched.count()
-            if (nUnmatched > 0) {
-              System.err.println(s"[mirrorFramesMulti] batch $batchId: " +
-                s"$nUnmatched DML frame(s) match no configured table " +
-                s"(configured: ${tables.map(_.table).mkString(",")}) — " +
-                "check the table specs for typos" +
-                deadRoot.fold("")(d => s"; dead-lettered under $d/_unmatched_relid"))
-              deadRoot.foreach { d =>
-                unmatched
-                  .select(col(dataCol), col("relids"),
-                    lit("unmatched_relid").as("_reason"),
-                    lit(batchId).as("_batch_id"))
-                  .write.mode("append").parquet(s"$d/_unmatched_relid")
-              }
-            }
-            val work = perTable.map { case (t, relids) =>
-              if (relids.isEmpty)
-                // never-described table: no frames can be its, and parse
-                // (rightly) refuses to run without a Relation — its LSN
-                // simply doesn't advance this batch, the safe direction
-                Future.successful(())
-              else {
-                val subset = tagged
-                  .where(size(col("relids")) === 0 ||
-                    arrays_overlap(col("relids"), lit(relids.toArray.sorted)))
-                  .select(col(dataCol))
-                Future(syncTableBatch(spark, subset, dataCol, t.table, t.keys,
-                  s"$targetDir/${t.table}",
-                  deadRoot.map(d => s"$d/${t.table}"), t.nBuckets,
-                  healToast, batchId, stateDirOpt = Some(targetDir)))
-              }
-            }
-            Await.result(Future.sequence(work),
-              scala.concurrent.duration.Duration.Inf)
-            ()
-          } finally tagged.unpersist(false)
-        }
-      }
+      .foreachBatch(syncFrames(frames.sparkSession, dataCol, tables,
+        targetDir, deadRoot))
       .start()
+
+  /** The per-batch body of every frame path, as a function of (frames,
+    * batch id). A postgres publication usually carries several tables over
+    * a single slot, so the batch is tagged in a single decode pass
+    * ([[PgOutput.tagRelids]]): every DML/Relation frame learns the one
+    * relid it belongs to (TRUNCATE its list), transaction-control frames
+    * belong to all tables, and the driver resolves table names to relid
+    * sets from the batch's own Relation frames plus each table's
+    * persisted registry. Each table then syncs from its OWN frame subset
+    * (its relids + the shared control frames) through [[syncTableBatch]].
+    * The per-table syncs touch disjoint files and run CONCURRENTLY, the
+    * [[graft.operators.MaterializedJoin]] pattern, on threads that carry
+    * the calling thread's Spark local properties — a streaming query's
+    * job group covers every job of its microbatch.
+    *
+    * A DML frame whose relid maps to NO named table is counted and logged
+    * per batch (and dead-lettered under `deadRoot/_unmatched_relid` when a
+    * deadRoot is set): the specs NAME the full intended capture set, so
+    * unmatched DML usually means a typo'd table name silently losing a
+    * whole table's changes while its LSN still advances via control
+    * frames. Broken frames reach EVERY table's dead-letter (loud beats
+    * lost).
+    */
+  private[graft] def syncFrames(spark: SparkSession, dataCol: String,
+                                tables: Seq[TableSpec], targetDir: String,
+                                deadRoot: Option[String]): (DataFrame, Long) => Unit = {
+    require(tables.nonEmpty, "syncFrames needs at least one table")
+    require(tables.map(_.table).distinct.size == tables.size,
+      s"duplicate table names in ${tables.map(_.table)}")
+    (batch, batchId) => if (!batch.isEmpty) {
+      val tagged = PgOutput.tagRelids(batch, dataCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // name → relids: the batch's own Relation frames (one small
+        // collect over the pinned tagged batch) + each persisted
+        // registry (pgoutput re-describes a relation only on change
+        // or reconnect — bare-DML batches resolve via the registry)
+        val batchPairs = tagged.where(col("rel_name").isNotNull)
+          .select(col("rel_name"), element_at(col("relids"), 1).as("relid"))
+          .distinct().collect()
+          .map(r => (r.getString(0), r.getInt(1)))
+        val perTable = tables.map { t =>
+          t -> (batchPairs.collect { case (n, r) if n == t.table => r } ++
+            readRegistry(spark, targetDir, t.table).map(_.relid)).toSet
+        }
+        // misconfiguration tripwire: DML whose relid matches NO
+        // configured table would otherwise vanish while the LSN still
+        // advances — count it, log it, and dead-letter it when a dead
+        // root exists (its own subdir: the reason schema differs from
+        // the parse dead-letter's)
+        val allRelids = perTable.flatMap(_._2).toSet
+        val unmatched = tagged.where(col("rel_name").isNull &&
+          size(col("relids")) > 0 &&
+          (if (allRelids.isEmpty) lit(true)
+           else !arrays_overlap(col("relids"),
+             lit(allRelids.toArray.sorted))))
+        val nUnmatched = unmatched.count()
+        if (nUnmatched > 0) {
+          System.err.println(s"[syncFrames] batch $batchId: " +
+            s"$nUnmatched DML frame(s) match no configured table " +
+            s"(configured: ${tables.map(_.table).mkString(",")}) — " +
+            "check the table specs for typos" +
+            deadRoot.fold("")(d => s"; dead-lettered under $d/_unmatched_relid"))
+          deadRoot.foreach { d =>
+            unmatched
+              .select(col(dataCol), col("relids"),
+                lit("unmatched_relid").as("_reason"),
+                lit(batchId).as("_batch_id"))
+              .write.mode("append").parquet(s"$d/_unmatched_relid")
+          }
+        }
+        // a table no Relation has described yet has no frames here, and
+        // parse (rightly) refuses to run without a Relation — its LSN
+        // simply doesn't advance this batch, the safe direction
+        CdcStream.concurrently(spark, perTable.collect {
+          case (t, relids) if relids.nonEmpty =>
+            val subset = tagged
+              .where(size(col("relids")) === 0 ||
+                arrays_overlap(col("relids"), lit(relids.toArray.sorted)))
+              .select(col(dataCol))
+            () => syncTableBatch(spark, subset, dataCol, t, targetDir,
+              deadRoot, batchId)
+        })
+      } finally tagged.unpersist(false)
+    }
   }
 
-  /** One table's batch sync — the body both capture loops share: parse,
-    * dead-letter, TOAST heal, truncate tombstones, mirror upsert, registry
+  /** One table's share of a batch: parse, dead-letter, TOAST heal,
+    * truncate tombstones, mirror upsert into `root/<table>`, registry
     * write, then (only when nothing was lost) the confirmed-flush LSN
     * advance. `batch` carries this table's frames plus the stream's
     * transaction-control frames.
     */
-  private[graft] def syncTableBatch(spark: SparkSession, batch: DataFrame,
-                                    dataCol: String, table: String,
-                                    keys: Seq[String], targetDir: String,
-                                    deadDir: Option[String], nBuckets: Int,
-                                    healToast: Boolean, batchId: Long,
-                                    stateDirOpt: Option[String] = None): Unit = {
-        {
-          // single-table loop: registry + LSN live beside the mirror;
-          // multi-table: they share the ROOT (one registry store for the
-          // stream) while each table's mirror lives in its own subdir
-          val stateDir = stateDirOpt.getOrElse(targetDir)
-          val prior = readRegistry(spark, stateDir, table)
-          val parsed = PgOutput.parse(batch, dataCol, table, prior)
-          deadDir.foreach { d =>
-            val dead = parsed.deadLetter.withColumn("_batch_id", lit(batchId))
-            if (!parsed.deadLetter.isEmpty)
-              dead.write.mode("append").parquet(d)
-          }
-          // unchanged-TOAST repair against earlier same-batch rows + the
-          // committed mirror's newest image — BEFORE the upsert, so the
-          // mirror only ever stores healed rows (a toasted null must not
-          // win the FINAL merge over the real prior value)
-          val healedChanges =
-            if (!healToast) parsed.changes
-            else PgOutput.healUnchangedToast(parsed.changes, keys,
-              mirror = if (CdcStream.hasVisibleParquet(spark, targetDir))
-                Some(graft.sources.SyncManifest.readCommitted(spark, targetDir))
-              else None)
-          val batchDf = healedChanges
-            .withColumn("is_deleted", col("_is_deleted"))
-            .withColumn("_batch_id", lit(batchId))
-          // committed TRUNCATE: no per-key tombstones exist on the wire, so
-          // synthesize them — every key the committed mirror holds below
-          // the truncate LSN gets a tombstone AT that LSN (a same-batch
-          // reinsert carries a higher LSN and wins the FINAL merge), and
-          // batch changes at-or-below it are wiped history. Replay-safe:
-          // regenerated tombstones upsert idempotently, and keys already
-          // at-or-past the LSN are untouched by the newest-version merge.
-          val upserts = parsed.truncates match {
-            case Nil => batchDf
-            case ts =>
-              val lsn = ts.map(_.walStart).max
-              val survivors = PgOutput.applyTruncates(batchDf, ts)
-              if (!CdcStream.hasVisibleParquet(spark, targetDir)) survivors
-              else {
-                val tomb = graft.sources.SyncManifest
-                  .readCommitted(spark, targetDir)
-                  .where(col("_version") <= lsn)
-                  .select(keys.map(col) ++ Seq(
-                    lit(lsn).as("_version"), lit(true).as("_is_deleted"),
-                    lit(true).as("is_deleted"),
-                    lit(table).as("_source_table"),
-                    lit(batchId).as("_batch_id")): _*)
-                survivors.unionByName(tomb, allowMissingColumns = true)
-              }
-          }
-          CdcStream.upsertBatch(spark, upserts,
-            keys, "_version", targetDir, nBuckets)
-          if (parsed.relations.toSet != prior.toSet)
-            writeRegistry(spark, stateDir, table, parsed.relations)
-          // feedback bookkeeping LAST (after the mirror + registry are
-          // durable): the confirmed-flush LSN advances to the batch's max
-          // frame walEnd, but ONLY when nothing was lost — dead-lettered
-          // frames count as landed only if deadDir persisted them. A crash
-          // between the mirror commit and this write re-acks the OLD
-          // (lower) LSN on restart: the server resends the tail and the
-          // replay-idempotent upsert converges — never the reverse
-          // (acking WAL that never landed).
-          // Gate on frame-COUNT emptiness, not on the max-walEnd peek:
-          // frameWalEnd returns None for frames shorter than 9 bytes or
-          // with an outer tag other than w/k, so a batch whose only dead
-          // frames are peekless would pass a peek-based guard and let the
-          // confirmed-flush LSN advance past WAL that landed nowhere.
-          val deadSafe = deadDir.isDefined || parsed.deadLetter.isEmpty
-          if (deadSafe)
-            PgOutput.maxFrameWalEnd(batch, dataCol)
-              .foreach(advanceConfirmedLsn(spark, stateDir, table, _))
+  private def syncTableBatch(spark: SparkSession, batch: DataFrame,
+                             dataCol: String, spec: TableSpec, root: String,
+                             deadRoot: Option[String], batchId: Long): Unit = {
+    val TableSpec(table, keys, nBuckets) = spec
+    val mirrorDir = s"$root/$table"
+    val deadDir = deadRoot.map(d => s"$d/$table")
+    val prior = readRegistry(spark, root, table)
+    val parsed = PgOutput.parse(batch, dataCol, table, prior)
+    deadDir.foreach { d =>
+      val dead = parsed.deadLetter.withColumn("_batch_id", lit(batchId))
+      if (!parsed.deadLetter.isEmpty)
+        dead.write.mode("append").parquet(d)
+    }
+    // unchanged-TOAST repair against earlier same-batch rows + the
+    // committed mirror's newest image — BEFORE the upsert, so the
+    // mirror only ever stores healed rows (a toasted null must not
+    // win the FINAL merge over the real prior value)
+    val healedChanges = PgOutput.healUnchangedToast(parsed.changes, keys,
+      mirror = if (CdcStream.hasVisibleParquet(spark, mirrorDir))
+        Some(graft.sources.SyncManifest.readCommitted(spark, mirrorDir))
+      else None)
+    val batchDf = healedChanges
+      .withColumn("is_deleted", col("_is_deleted"))
+      .withColumn("_batch_id", lit(batchId))
+    // committed TRUNCATE: no per-key tombstones exist on the wire, so
+    // synthesize them — every key the committed mirror holds below
+    // the truncate LSN gets a tombstone AT that LSN (a same-batch
+    // reinsert carries a higher LSN and wins the FINAL merge), and
+    // batch changes at-or-below it are wiped history. Replay-safe:
+    // regenerated tombstones upsert idempotently, and keys already
+    // at-or-past the LSN are untouched by the newest-version merge.
+    val upserts = parsed.truncates match {
+      case Nil => batchDf
+      case ts =>
+        val lsn = ts.map(_.walStart).max
+        val survivors = PgOutput.applyTruncates(batchDf, ts)
+        if (!CdcStream.hasVisibleParquet(spark, mirrorDir)) survivors
+        else {
+          val tomb = graft.sources.SyncManifest
+            .readCommitted(spark, mirrorDir)
+            .where(col("_version") <= lsn)
+            .select(keys.map(col) ++ Seq(
+              lit(lsn).as("_version"), lit(true).as("_is_deleted"),
+              lit(true).as("is_deleted"),
+              lit(table).as("_source_table"),
+              lit(batchId).as("_batch_id")): _*)
+          survivors.unionByName(tomb, allowMissingColumns = true)
         }
+    }
+    CdcStream.upsertBatch(spark, upserts,
+      keys, "_version", mirrorDir, nBuckets)
+    if (parsed.relations.toSet != prior.toSet)
+      writeRegistry(spark, root, table, parsed.relations)
+    // feedback bookkeeping LAST (after the mirror + registry are
+    // durable): the confirmed-flush LSN advances to the batch's max
+    // frame walEnd, but ONLY when nothing was lost — dead-lettered
+    // frames count as landed only if deadDir persisted them. A crash
+    // between the mirror commit and this write re-acks the OLD
+    // (lower) LSN on restart: the server resends the tail and the
+    // replay-idempotent upsert converges — never the reverse
+    // (acking WAL that never landed).
+    // Gate on frame-COUNT emptiness, not on the max-walEnd peek:
+    // frameWalEnd returns None for frames shorter than 9 bytes or
+    // with an outer tag other than w/k, so a batch whose only dead
+    // frames are peekless would pass a peek-based guard and let the
+    // confirmed-flush LSN advance past WAL that landed nowhere.
+    val deadSafe = deadDir.isDefined || parsed.deadLetter.isEmpty
+    if (deadSafe)
+      PgOutput.maxFrameWalEnd(batch, dataCol)
+        .foreach(advanceConfirmedLsn(spark, root, table, _))
   }
 
   // ── replication-slot feedback (Standby Status Update bookkeeping) ────
@@ -336,13 +309,18 @@ object PgOutputStream {
     * at the consistent point. Never the reverse order: an LSN written
     * first would let a crash skip the snapshot entirely while the server
     * believes it delivered.
+    *
+    * `targetDir` is the table's mirror, `<root>/<table>`; the rewind guard
+    * reads, and the LSN lands in, the capture root `<root>` — where
+    * [[mirrorFramesMulti]] and the socket client keep it.
     */
   def bootstrapSnapshot(spark: SparkSession, snapshot: DataFrame,
                         keys: Seq[String], consistentLsn: Long,
                         targetDir: String, table: String,
                         nBuckets: Int = 16): Unit = {
     require(consistentLsn > 0, s"bad consistent point $consistentLsn")
-    val confirmed = readConfirmedLsn(spark, targetDir, table)
+    val root = new Path(targetDir).getParent.toString
+    val confirmed = readConfirmedLsn(spark, root, table)
     require(confirmed == 0L || confirmed == consistentLsn,
       s"mirror at $targetDir already confirmed ${confirmed} — bootstrap " +
         "would rewind an active capture; use a fresh target or resume the " +
@@ -353,7 +331,7 @@ object PgOutputStream {
       .withColumn("_source_table", lit(table))
     CdcStream.upsertBatch(spark, seeded, keys, "_version", targetDir,
       nBuckets)
-    advanceConfirmedLsn(spark, targetDir, table, consistentLsn)
+    advanceConfirmedLsn(spark, root, table, consistentLsn)
   }
 
   private def registryPath(targetDir: String, table: String) =

@@ -386,6 +386,14 @@ class MirrorRunnerSpec extends SparkSpec {
     assert(runner2.readFramesFinal("orders").count() === 0L)
     // the polling-path verbs still see THEIR namespace untouched
     assert(runner2.status().forall(_.state == "fresh"))
+    // a bootstrap over the live mirror reads the stream's confirmed LSN
+    // (kept at the capture root) and refuses to rewind it
+    val rewind = intercept[IllegalArgumentException] {
+      graft.streaming.PgOutputStream.bootstrapSnapshot(spark,
+        Seq((1L, "ann")).toDF("id", "name"), Seq("id"), consistentLsn = 50L,
+        targetDir = s"$root/mirror/frames/items", table = "items", nBuckets = 4)
+    }
+    assert(rewind.getMessage.contains("rewind"))
   }
 
   test("continuous mode: the loop drives rounds; a broken round is " +

@@ -10,7 +10,8 @@ import graft.streaming.PgOutputStream
   * changes → mirror, with the relation registry surviving ACROSS batches
   * (bare-DML batches decode under schemas learned earlier) and through
   * restart — each AvailableNow run below is a fresh query over the same
-  * mirror + checkpoint, the reference flow-worker's stop/start cycle.
+  * capture root + checkpoint, the reference flow-worker's stop/start
+  * cycle. Table `t` mirrors to `<root>/t`; its state sits in `<root>`.
   */
 class PgOutputStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -33,13 +34,15 @@ class PgOutputStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("pgstream").toString
     val target = s"$root/mirror"
+    val mirror = s"$target/items"
     val dead = s"$root/dead"
     val ckpt = s"$root/ckpt"
     val input = MemoryStream[Frame]
 
     def runBatch(): Unit = {
-      val q = PgOutputStream.mirrorFrames(input.toDF(), "data", "items",
-        Seq("id"), target, ckpt, deadDir = Some(dead), nBuckets = 4)
+      val q = PgOutputStream.mirrorFramesMulti(input.toDF(), "data",
+        Seq(PgOutputStream.TableSpec("items", Seq("id"), nBuckets = 4)),
+        target, ckpt, deadRoot = Some(dead))
       q.awaitTermination()
     }
 
@@ -51,7 +54,7 @@ class PgOutputStreamSpec extends SparkSpec {
           Fixture.insert(102, 7, Seq(VText("2"), VText("bob"), VText("5"))))))
         .map(Frame): _*)
     runBatch()
-    assert(PgOutputStream.readFinal(spark, target, Seq("id"))
+    assert(PgOutputStream.readFinal(spark, mirror, Seq("id"))
       .select("id", "name", "qty").orderBy("id").collect().toSeq ==
       Seq(Row(1L, "ann", 3), Row(2L, "bob", 5)))
 
@@ -66,9 +69,9 @@ class PgOutputStreamSpec extends SparkSpec {
         Fixture.unknown(203, 'Z'))))
         .map(Frame): _*)
     runBatch()
-    assert(PgOutputStream.readFinal(spark, target, Seq("id"))
+    assert(PgOutputStream.readFinal(spark, mirror, Seq("id"))
       .select("id", "name", "qty").collect().toSeq == Seq(Row(1L, "anne", 4)))
-    val deadRows = spark.read.parquet(dead)
+    val deadRows = spark.read.parquet(s"$dead/items")
     assert(deadRows.count() == 1)
     assert(deadRows.select("reason").head().getString(0).contains("'Z'"))
 
@@ -84,7 +87,7 @@ class PgOutputStreamSpec extends SparkSpec {
           Fixture.insert(401, 7, Seq(VText("4"), VText("dog"), VText("2"), VText("hi"))))))
         .map(Frame): _*)
     runBatch()
-    val fin = PgOutputStream.readFinal(spark, target, Seq("id"))
+    val fin = PgOutputStream.readFinal(spark, mirror, Seq("id"))
     assert(fin.select("id", "name", "qty", "note").orderBy("id").collect().toSeq ==
       Seq(Row(1L, "anne", 4, null), Row(3L, "cat", 9, null), Row(4L, "dog", 2, "hi")))
     // registry now holds both schema versions, LSN-ordered
@@ -103,7 +106,7 @@ class PgOutputStreamSpec extends SparkSpec {
         Fixture.insert(502, 7, Seq(VText("3"), VText("cat2"), VText("1"), VNull)))))
         .map(Frame): _*)
     runBatch()
-    assert(PgOutputStream.readFinal(spark, target, Seq("id"))
+    assert(PgOutputStream.readFinal(spark, mirror, Seq("id"))
       .select("id", "name", "qty").orderBy("id").collect().toSeq ==
       Seq(Row(3L, "cat2", 1)))
   }
@@ -117,8 +120,9 @@ class PgOutputStreamSpec extends SparkSpec {
     val input = MemoryStream[Frame]
 
     def runBatch(): Unit = {
-      val q = PgOutputStream.mirrorFrames(input.toDF(), "data", "items",
-        Seq("id"), target, ckpt, nBuckets = 4)
+      val q = PgOutputStream.mirrorFramesMulti(input.toDF(), "data",
+        Seq(PgOutputStream.TableSpec("items", Seq("id"), nBuckets = 4)),
+        target, ckpt)
       q.awaitTermination()
     }
 
@@ -137,7 +141,7 @@ class PgOutputStreamSpec extends SparkSpec {
         Fixture.update(201, 7, Seq(VText("1"), VUnchanged, VText("2")))))
         .map(Frame): _*)
     runBatch()
-    val fin = PgOutputStream.readFinal(spark, target, Seq("id"))
+    val fin = PgOutputStream.readFinal(spark, s"$target/items", Seq("id"))
     assert(fin.select("id", "name", "qty").collect().toSeq ==
       Seq(Row(1L, "huge-payload", 2)))
     // the stored image is healed, not just the read: the toast flag is gone
@@ -150,10 +154,10 @@ class PgOutputStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("pgfeedback").toString
     val target = s"$root/mirror"
     val input = MemoryStream[Frame]
+    val specs = Seq(PgOutputStream.TableSpec("items", Seq("id"), nBuckets = 4))
     def runBatch(): Unit = {
-      val q = PgOutputStream.mirrorFrames(input.toDF(), "data", "items",
-        Seq("id"), target, s"$root/ckpt", deadDir = Some(s"$root/dead"),
-        nBuckets = 4)
+      val q = PgOutputStream.mirrorFramesMulti(input.toDF(), "data", specs,
+        target, s"$root/ckpt", deadRoot = Some(s"$root/dead"))
       q.awaitTermination()
     }
 
@@ -218,8 +222,8 @@ class PgOutputStreamSpec extends SparkSpec {
         tx(1, 100, Seq(
           Fixture.insert(101, 7, Seq(VText("1"), VText("ann"), VText("3"))))) ++
         Seq(Fixture.unknown(800, 'Z'))).map(Frame): _*)
-    PgOutputStream.mirrorFrames(input2.toDF(), "data", "items", Seq("id"),
-      target2, s"$root/ckpt2", deadDir = None, nBuckets = 4).awaitTermination()
+    PgOutputStream.mirrorFramesMulti(input2.toDF(), "data", specs,
+      target2, s"$root/ckpt2", deadRoot = None).awaitTermination()
     assert(PgOutputStream.readConfirmedLsn(spark, target2, "items") == 0L)
   }
 
@@ -236,21 +240,28 @@ class PgOutputStreamSpec extends SparkSpec {
       RelCol("oid", 20, -1, isKey = true),
       RelCol("amount", 23, -1, isKey = false))
 
+    // every job of the run carries the query's job group, including the
+    // jobs of the per-table syncs that run on other threads
     def runBatch(): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
+          groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
       }
       spark.sparkContext.addSparkListener(listener)
-      try {
+      val q = try {
         val q = PgOutputStream.mirrorFramesMulti(input.toDF(), "data", specs,
           target, s"$root/ckpt", deadRoot = Some(dead))
         q.awaitTermination()
         Thread.sleep(300) // listener delivery lag (starts precede return)
+        q
       } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
+      val seen = groups.toArray.toSeq
+      assert(seen.nonEmpty && seen.forall(_ == q.runId.toString),
+        s"jobs outside the query's job group ${q.runId}: " +
+          seen.groupBy(identity).map { case (g, n) => s"$g x${n.size}" })
+      seen.size
     }
 
     // batch 1: BOTH relations + one interleaved tx touching both tables,

@@ -5,8 +5,9 @@ import java.net.{ServerSocket, Socket}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-import graft.sources.{PgOutput, ReplicationClient}
+import graft.sources.{PgOutput, ReplicationClient, SyncManifest}
 import graft.sources.PgOutput.{Fixture, RelCol, VNull, VText}
 import graft.streaming.PgOutputStream
 
@@ -14,9 +15,10 @@ import graft.streaming.PgOutputStream
   * (built from the existing [[PgOutput.Fixture]] frame writer and the
   * Standby Status writer dual) speaks the replication subset to a real
   * [[ReplicationClient]] over a real socket — START_REPLICATION handshake,
-  * frame pump into the checkpointed mirror loop, batch-cadence acks,
+  * frame pump into the per-batch mirror sync, batch-cadence acks,
   * inline deadline-keepalive replies, and a mid-stream disconnect with
-  * crash-resume from the durable confirmed-flush LSN.
+  * crash-resume from the durable confirmed-flush LSN. The client keeps the
+  * capture layout: mirror `<root>/frames/items`, state in `<root>/frames`.
   */
 class ReplicationClientSpec extends SparkSpec {
 
@@ -154,11 +156,20 @@ class ReplicationClientSpec extends SparkSpec {
     // then (the ack send is best-effort on the dying socket), so the
     // resume handshake must carry the durable confirmed LSN 250
     val srv = new FixtureServer(dropAfter = 6)
+    val target = s"$root/frames"
     val client = new ReplicationClient(spark, "127.0.0.1", srv.port,
       slot = "testslot", table = "items", keys = Seq("id"),
-      targetDir = s"$root/mirror", spoolDir = s"$root/spool",
-      checkpointDir = s"$root/ckpt", nBuckets = 4)
-    val frames = client.run(untilLsn = 700L, maxReconnects = 4)
+      targetDir = target, nBuckets = 4)
+    val queriesStarted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        queriesStarted.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(queries)
+    val frames = try client.run(untilLsn = 700L, maxReconnects = 4)
+      finally spark.streams.removeListener(queries)
     srv.server.close()
     srv.thread.join(10000)
 
@@ -180,15 +191,31 @@ class ReplicationClientSpec extends SparkSpec {
     assert(acks.last == 700L, s"final ack should be 700: $acks")
     assert(client.confirmedLsn == 700L)
     // the mirror converged to the post-replay FINAL state
-    assert(PgOutputStream.readFinal(spark, s"$root/mirror", Seq("id"))
+    assert(PgOutputStream.readFinal(spark, s"$target/items", Seq("id"))
       .select("id", "name", "qty").orderBy("id").collect().toSeq ==
       Seq(Row(1L, "anne", 4), Row(3L, "cat", 7)))
+    // batches sync directly: no streaming query, no spool or checkpoint
+    // beside the mirror and its state
+    assert(queriesStarted.get() == 0)
+    assert(new java.io.File(root).list().toSeq == Seq("frames"))
+    assert(new java.io.File(target).listFiles().filter(_.isDirectory)
+      .map(_.getName).toSeq == Seq("items"))
+    // a batch's id is the durable LSN it starts from: ids rise with the
+    // WAL, and the resumed connection's batches continue from the
+    // handshake LSN instead of restarting
+    val landed = SyncManifest.readCommitted(spark, s"$target/items")
+      .select("_version", "_batch_id").orderBy("_version").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(landed.map(_._2) == landed.map(_._2).sorted, s"batch ids regressed: $landed")
+    assert(landed.filter(_._1 > starts(1)).forall(_._2 >= starts(1)),
+      s"batch ids restarted after the reconnect: $landed")
   }
 
   test("snapshot bootstrap: seed at the consistent point, stream the tail") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("replboot").toString
-    val mirror = s"$root/mirror"
+    val target = s"$root/frames"
+    val mirror = s"$target/items"
     // the snapshot a CREATE_REPLICATION_SLOT's exported snapshot would
     // have produced at consistent point 250: tx1 applied (ids 1, 2)
     val snap = Seq((1L, "ann", 3), (2L, "bob", 5)).toDF("id", "name", "qty")
@@ -198,7 +225,7 @@ class ReplicationClientSpec extends SparkSpec {
     // same version; the LSN advance is monotone-idempotent)
     PgOutputStream.bootstrapSnapshot(spark, snap, Seq("id"),
       consistentLsn = 250L, targetDir = mirror, table = "items", nBuckets = 4)
-    assert(PgOutputStream.readConfirmedLsn(spark, mirror, "items") == 250L)
+    assert(PgOutputStream.readConfirmedLsn(spark, target, "items") == 250L)
 
     // the socket loop now handshakes AT the consistent point: the server
     // resume-filter serves only the post-250 tail (tx2 update+insert,
@@ -206,8 +233,7 @@ class ReplicationClientSpec extends SparkSpec {
     val srv = new FixtureServer(dropAfter = Int.MaxValue)
     val client = new ReplicationClient(spark, "127.0.0.1", srv.port,
       slot = "testslot", table = "items", keys = Seq("id"),
-      targetDir = mirror, spoolDir = s"$root/spool",
-      checkpointDir = s"$root/ckpt", nBuckets = 4)
+      targetDir = target, nBuckets = 4)
     client.run(untilLsn = 700L, maxReconnects = 2)
     srv.server.close()
     srv.thread.join(10000)
